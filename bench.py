@@ -56,12 +56,14 @@ were measured reading their own warm cache instead of recomputing. From
 r16 the PRIMARY ``queries``/``value`` (and ``full_*``) medians wrap every
 timed invocation in ``materialized_scope()``: each run builds the plan,
 computes, and releases every persist it created, so the median measures
-RECOMPUTATION. Process-level parquet memos (the streaming static indexes,
-the mart-committed graph/codebook artifacts) survive scopes by design —
-they are the documented precompute-offline production form, built in the
-warm pass. The pre-r16 protocol is still run and dual-reported as
-``queries_legacy``/``value_legacy``/``full_*_legacy`` for round-over-round
-comparability (compare r15 ``queries`` against r16 ``queries_legacy``;
+RECOMPUTATION. Entries of the process-level artifact store
+(``artifacts.get_or_build``: the streaming static indexes, the
+mart-committed graph/codebook tables, the trained classifier weights)
+survive scopes by design — they are the documented precompute-offline
+production form, built in the warm pass. The pre-r16 protocol is still
+run and dual-reported as ``queries_legacy``/``value_legacy``/
+``full_*_legacy`` for round-over-round comparability (compare r15
+``queries`` against r16 ``queries_legacy``;
 scoped runs execute FIRST so the legacy runs' unreleased caches cannot
 leak into them).
 """
@@ -298,8 +300,8 @@ def main() -> None:
         "queries_legacy": medians_legacy,
     }
     if full_on:
-        # scoped tier keeps a warm pass (the per-process parquet memos —
-        # streaming static indexes, mart-committed artifacts — build there);
+        # scoped tier keeps a warm pass (the artifact store's entries —
+        # streaming static indexes, mart-committed tables — build there);
         # the legacy tier keeps its no-warm-pass protocol (its first run
         # doubles as the warm, exactly as pre-r16)
         n_before_full = len(probe_samples)

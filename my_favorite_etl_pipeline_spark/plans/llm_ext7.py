@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from ..caching import tracked_persist
 from ..functions import text as TX
 from ..registry import register
-from ..session import shuffle_partitions_tag
 from ..sources.tables import load
 from .llm_ext3 import _BENCH_PRED_SQL, _DUCK_NGRAMS, _bench_pred
 from .llm_ext4 import AUTO_K_SQL as _AUTO_K_SQL_REF
@@ -735,103 +734,63 @@ def q_knn_graph_nn_descent_hq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KNN_GRAPH_MEMO: dict[tuple[str, str], str] = {}  # key -> mart root dir
-_KNN_GRAPH_ROOT: list[str] = []
-_KNN_GRAPH_LOCK = __import__("threading").Lock()
-
-
-def _knn_graph_root() -> str:
-    # Per-PROCESS private root (tempfile.mkdtemp is collision-free), so
-    # concurrent processes never overwrite each other's parquet mid-read —
-    # the _static_dedup_index pattern. atexit-reaped: long-lived harness
-    # processes would otherwise leak one (assign, work) parquet copy per
-    # (sf_dir, partitions) key (ADVICE r9).
-    if not _KNN_GRAPH_ROOT:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="mfe_knn_graph_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _KNN_GRAPH_ROOT.append(root)
-    return _KNN_GRAPH_ROOT[0]
-
-
-def _knn_refined_tables(spark: SparkSession, sf_dir: str):
-    """``(assign, work)`` read back from :class:`VersionedMart` COMMITS —
-    the durable production posture, PROMOTED to the default r12 (VERDICT
-    r11 item 4): the NN-Descent graph is built ONCE per (corpus,
-    partitioning), committed through the M4 atomic manifest swap, and
-    EVERY consumer — the top-K readout (`knn_graph_nn_descent`), the flat
-    and durable searches, the HNSW router — serves from the committed
-    snapshot. The pre-r12 raw-parquet session memo is gone; what
-    `graph_ann_search_durable` adds on top is the cross-process restart
-    semantics (fresh mart handles over a `materialize_knn_graph` root,
-    pinned in tests/test_graph_durable.py).
-
-    The memo keys on (sf_dir, spark.sql.shuffle.partitions) so the
-    partitioning-determinism harness — which re-runs every query under a
-    DIFFERENT shuffle partitioning in one process — still rebuilds and
-    re-checks the graph per partitioning instead of reading the first
-    build back; repeated same-config runs (bench medians, oracle sweeps)
-    hit the memo. Values are identical either way: the build is
+def _knn_graph_base(spark: SparkSession, sf_dir: str) -> str:
+    """Root of the committed refined NN-Descent graph — ``assign/``,
+    ``edges/`` and the undirected ``gund/`` adjacency, each a
+    :class:`VersionedMart` — the durable production posture, PROMOTED to
+    the default r12 (VERDICT r11 item 4): the graph is built ONCE through
+    the artifact store, committed through the M4 atomic manifest swap,
+    and EVERY consumer — the top-K readout (`knn_graph_nn_descent`), the
+    flat and durable searches, the HNSW router — serves from the
+    committed snapshot. What `graph_ann_search_durable` adds on top is
+    the cross-process restart semantics (fresh mart handles over a
+    `materialize_knn_graph` root, pinned in tests/test_graph_durable.py).
+    Values are identical across partitionings: the build is
     deterministic (integer scores, id tie-breaks) and parquet round-trips
     the integer contract columns exactly.
     """
-    import hashlib
-    import os
-
+    from .. import artifacts
     from ..sources.mart import VersionedMart
 
-    parts = shuffle_partitions_tag(spark)
-    key = (os.path.abspath(sf_dir), parts)
-    # Lock held across check-build-publish: if a harness ever runs two
-    # graph consumers concurrently (or re-enters after a timeout/retry),
-    # an unlocked memo lets two builders race one root while a reader
-    # holds it open — mixed/partial tables with plausible row counts, the
-    # exact unreproducible-divergence shape of CORRECTNESS_r09's red rows.
-    # The mart's own commit protocol (write-new-version, then atomic
-    # manifest rename) makes even a lost race an overwrite of identical
-    # data, never a torn table.
-    with _KNN_GRAPH_LOCK:
-        base = _KNN_GRAPH_MEMO.get(key)
-        if base is None:
-            digest = hashlib.sha256(f"{key[0]}\x00{parts}".encode()).hexdigest()[:16]
-            base = os.path.join(_knn_graph_root(), digest)
-            am = VersionedMart(os.path.join(base, "assign"))
-            em = VersionedMart(os.path.join(base, "edges"))
-            gm = VersionedMart(os.path.join(base, "gund"))
-            if (
-                am.current_version() is None
-                or em.current_version() is None
-                or gm.current_version() is None
-            ):
-                assign, work = _knn_refined_work(spark, sf_dir)
-                # the search side needs only the integer contract columns
-                # (quantized vector + exact integer norm); __v/__n stay out
-                # of the durable table — no float ever rides to serving
-                am.commit(assign.select("vec_id", "cluster", "__q", "__s"), "v1")
-                em.commit(work.select("src_id", "nbr_id", "cos_sim"), "v1")
-                # the UNDIRECTED adjacency the beam search expands — the
-                # symmetrize + distinct is deterministic from the edge
-                # table, so it belongs in the build, not in every search
-                # call (r16-opt: rebuilding + persisting it per search
-                # measured ~0.9 s/call of the serving floor)
-                edges_tbl = em.read(spark)
-                gm.commit(
-                    edges_tbl.select(
-                        F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr")
-                    )
-                    .unionAll(
-                        edges_tbl.select(
-                            F.col("nbr_id").alias("node"),
-                            F.col("src_id").alias("nbr"),
-                        )
-                    )
-                    .distinct(),
-                    "v1",
+    def build(base: str) -> str:
+        am = VersionedMart(os.path.join(base, "assign"))
+        em = VersionedMart(os.path.join(base, "edges"))
+        assign, work = _knn_refined_work(spark, sf_dir)
+        # the search side needs only the integer contract columns
+        # (quantized vector + exact integer norm); __v/__n stay out
+        # of the durable table — no float ever rides to serving
+        am.commit(assign.select("vec_id", "cluster", "__q", "__s"), "v1")
+        em.commit(work.select("src_id", "nbr_id", "cos_sim"), "v1")
+        # the UNDIRECTED adjacency the beam search expands — the
+        # symmetrize + distinct is deterministic from the edge
+        # table, so it belongs in the build, not in every search
+        # call (r16-opt: rebuilding + persisting it per search
+        # measured ~0.9 s/call of the serving floor)
+        edges_tbl = em.read(spark)
+        VersionedMart(os.path.join(base, "gund")).commit(
+            edges_tbl.select(
+                F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr")
+            )
+            .unionAll(
+                edges_tbl.select(
+                    F.col("nbr_id").alias("node"),
+                    F.col("src_id").alias("nbr"),
                 )
-            _KNN_GRAPH_MEMO[key] = base
+            )
+            .distinct(),
+            "v1",
+        )
+        return base
+
+    return artifacts.get_or_build(spark, sf_dir, "knn_graph", build, ["embeddings"])
+
+
+def _knn_refined_tables(spark: SparkSession, sf_dir: str):
+    """``(assign, work)`` read back from the committed graph
+    (:func:`_knn_graph_base`)."""
+    from ..sources.mart import VersionedMart
+
+    base = _knn_graph_base(spark, sf_dir)
     return (
         VersionedMart(os.path.join(base, "assign")).read(spark),
         VersionedMart(os.path.join(base, "edges")).read(spark),
@@ -841,12 +800,10 @@ def _knn_refined_tables(spark: SparkSession, sf_dir: str):
 def _knn_gund_table(spark: SparkSession, sf_dir: str):
     """The committed undirected adjacency (node, nbr) of the refined
     graph — built and committed alongside assign/edges in
-    :func:`_knn_refined_tables`; a parquet scan at search time."""
+    :func:`_knn_graph_base`; a parquet scan at search time."""
     from ..sources.mart import VersionedMart
 
-    _knn_refined_tables(spark, sf_dir)  # ensure built + committed
-    parts = shuffle_partitions_tag(spark)
-    base = _KNN_GRAPH_MEMO[(os.path.abspath(sf_dir), parts)]
+    base = _knn_graph_base(spark, sf_dir)
     return VersionedMart(os.path.join(base, "gund")).read(spark)
 
 
@@ -1083,11 +1040,16 @@ def graph_beam_search(
     # integer norm become literals in every score plan (driver state, the
     # same class as the beam itself; integer arithmetic is bit-identical
     # to the column form — A/B-verified SAME top-k)
-    qrow = (
+    qrows = (
         assign.filter(F.col("vec_id") == 0)
         .select(F.col("__q").alias("qq"), F.col("__s").alias("qs"))
-        .collect()[0]
+        .collect()
     )
+    if not qrows:
+        raise ValueError(
+            "graph_beam_search: query vector vec_id 0 is absent from assign"
+        )
+    qrow = qrows[0]
     qq_lit = F.array(*[F.lit(int(x)) for x in qrow.qq])
     qs_lit = F.lit(int(qrow.qs))
 
@@ -1252,9 +1214,6 @@ def pagerank_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # graph_ann_search_durable — the graph family's production posture made real
 
-_DURABLE_GRAPH_MEMO: dict[tuple[str, str], str] = {}
-
-
 def materialize_knn_graph(spark: SparkSession, sf_dir: str, root: str, version: str = "v1"):
     """Commit the refined NN-Descent graph as two DURABLE
     manifest-committed tables under ``root`` — ``assign/`` (vectors +
@@ -1295,27 +1254,20 @@ def q_graph_ann_search_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked path. Restart/versioning semantics (fresh mart handle,
     no rebuild, history) are pinned in tests/test_graph_durable.py.
 
-    The mart root lives under the per-process temp root here (fixture
-    stand-in, atexit-reaped); production points ``materialize_knn_graph``
-    at a real warehouse path — the commit protocol is identical.
+    The mart root lives in the artifact store here (fixture stand-in,
+    reaped at exit); production points ``materialize_knn_graph`` at a
+    real warehouse path — the commit protocol is identical.
     """
-    import hashlib
-
+    from .. import artifacts
     from ..sources.mart import VersionedMart
 
-    parts = shuffle_partitions_tag(spark)
-    key = (os.path.abspath(sf_dir), parts)
-    with _KNN_GRAPH_LOCK:
-        root = _DURABLE_GRAPH_MEMO.get(key)
-    if root is None:
-        digest = hashlib.sha256(f"durable\x00{key[0]}\x00{parts}".encode()).hexdigest()[:16]
-        root = os.path.join(_knn_graph_root(), f"durable-{digest}")
-        # build outside the lock (the underlying _knn_refined_tables build
-        # is itself lock-guarded + memoized); VersionedMart.commit is
-        # atomic, so a concurrent double-commit of identical data is safe
+    def build(root: str) -> str:
         materialize_knn_graph(spark, sf_dir, root)
-        with _KNN_GRAPH_LOCK:
-            _DURABLE_GRAPH_MEMO[key] = root
+        return root
+
+    root = artifacts.get_or_build(
+        spark, sf_dir, "durable_graph", build, ["embeddings"]
+    )
     assign = VersionedMart(os.path.join(root, "assign")).read(spark)
     edges = VersionedMart(os.path.join(root, "edges")).read(spark)
     n = load(spark, sf_dir, "embeddings").count()

@@ -305,7 +305,7 @@ def stream_fuzzy_decon_pairs(
         .select(F.col("doc_id").alias("bench_id"), sh.alias("s_b"))
         .select("bench_id", "s_b", F.size("s_b").alias("nb"))
     )
-    # Materialize the static side ONCE per (process, sf_dir) — a stream-
+    # Materialize the static side ONCE (artifact store) — a stream-
     # static join re-evaluates the static plan EVERY micro-batch, so the
     # lazy form re-ran the bench slice's corpus scan + shingle regex per
     # trigger (measured 5.0× sf0.01→sf0.1 growth vs the batch twin's
@@ -363,60 +363,30 @@ def stream_fuzzy_decon_pairs(
     return spark.table(sink_name).orderBy("doc_id", "bench_id")
 
 
-# Session-scoped memo for the fuzzy-decontamination bench index: the
-# exploded (sh, bench_id, nb) posting list, parquet-materialized once per
-# (process, sf_dir). The fuzzy gate joins the FULL posting list (no
-# prefix cut — the static side is eval-suite-sized), so the index is
-# threshold-independent; nb rides each posting row so the collision
-# count folds straight into the Jaccard without a second static join.
-_FUZZY_BENCH_MEMO: dict[str, str] = {}
-
-
 def _fuzzy_bench_index(
     spark: SparkSession, sf_dir: str, bench: DataFrame
 ) -> DataFrame:
-    """Return the parquet-backed (sh, bench_id, nb) posting list — built
-    from ``bench`` on first call per (process, sf_dir), scanned
-    thereafter."""
-    key = os.path.abspath(sf_dir)
-    idx_path = _FUZZY_BENCH_MEMO.get(key)
-    if idx_path is None:
-        import hashlib
+    """The parquet-backed (sh, bench_id, nb) posting list of the
+    fuzzy-decontamination bench slice — written from ``bench`` once
+    through the artifact store, scanned thereafter. The fuzzy gate joins
+    the FULL posting list (no prefix cut — the static side is
+    eval-suite-sized), so the index is threshold-independent; nb rides
+    each posting row so the collision count folds straight into the
+    Jaccard without a second static join."""
+    from .. import artifacts
 
-        digest = hashlib.sha256(key.encode()).hexdigest()[:16]
-        idx_path = os.path.join(
-            _prefix_idx_root(), "fuzzy_bench", digest, "postings"
-        )
+    def build(d: str) -> str:
+        idx_path = os.path.join(d, "postings")
         (
             bench.select("bench_id", "nb", F.explode("s_b").alias("sh"))
             .write.mode("overwrite")
             .parquet(idx_path)
         )
-        _FUZZY_BENCH_MEMO[key] = idx_path
-    return spark.read.parquet(idx_path)
+        return idx_path
 
-
-# Session-scoped memo for the materialized static-side dedup index
-# (VERDICT r7 item 6): both frames derive ONLY from the static reference
-# corpus, so rebuilding the explode → df-count → rarest-first window chain
-# (prefix index) and re-running the regex shingle pipeline (full shingle
-# sets for the verify join) on every streaming run is pure waste —
-# production precomputes both offline as tables. First call per
-# (sf_dir, threshold) in this process builds and writes them (overwrite,
-# so a fresh process never reads stale data); later calls scan the
-# parquet directly.
-_PREFIX_IDX_MEMO: dict[tuple[str, float], tuple[str, str]] = {}
-_PREFIX_IDX_ROOT: list[str] = []  # lazily-created per-process temp root
-
-
-def _prefix_idx_root() -> str:
-    # Per-PROCESS private root (tempfile.mkdtemp is collision-free), so
-    # concurrent processes never overwrite each other's parquet mid-read.
-    if not _PREFIX_IDX_ROOT:
-        import tempfile
-
-        _PREFIX_IDX_ROOT.append(tempfile.mkdtemp(prefix="mfe_prefix_index_"))
-    return _PREFIX_IDX_ROOT[0]
+    return spark.read.parquet(
+        artifacts.get_or_build(spark, sf_dir, "fuzzy_bench", build, ["documents"])
+    )
 
 
 def _static_dedup_index(
@@ -424,20 +394,16 @@ def _static_dedup_index(
 ) -> tuple[DataFrame, DataFrame]:
     """Return ``(prefix_idx, static_tbl)`` — the narrow (sh, ref_id)
     prefix-posting table and the (ref_id, s_b, nb) full-shingle table —
-    materialized once per session from ``static``."""
+    written once from ``static`` through the artifact store (VERDICT r7
+    item 6): both frames derive ONLY from the static reference corpus,
+    so rebuilding the explode → df-count → rarest-first window chain and
+    re-running the regex shingle pipeline on every streaming run is pure
+    waste — production precomputes both offline as tables."""
     from pyspark.sql import Window
 
-    key = (os.path.abspath(sf_dir), threshold)
-    paths = _PREFIX_IDX_MEMO.get(key)
-    if paths is None:
-        # On-disk path derives from the SAME full key as the memo (hash of
-        # abspath + exact threshold) under a per-process temp root — two
-        # sf_dirs sharing a basename, or thresholds differing below 1%,
-        # get distinct directories.
-        import hashlib
+    from .. import artifacts
 
-        digest = hashlib.sha256(f"{key[0]}\x00{threshold!r}".encode()).hexdigest()[:16]
-        base = os.path.join(_prefix_idx_root(), digest)
+    def build(base: str) -> tuple[str, str]:
         idx_path = os.path.join(base, "prefix")
         st_path = os.path.join(base, "static")
         static.write.mode("overwrite").parquet(st_path)
@@ -466,8 +432,11 @@ def _static_dedup_index(
             .write.mode("overwrite")
             .parquet(idx_path)
         )
-        paths = (idx_path, st_path)
-        _PREFIX_IDX_MEMO[key] = paths
+        return idx_path, st_path
+
+    paths = artifacts.get_or_build(
+        spark, sf_dir, "prefix_index", build, ["documents"], (threshold,)
+    )
     return spark.read.parquet(paths[0]), spark.read.parquet(paths[1])
 
 
@@ -519,7 +488,7 @@ def stream_ingest_dedup_pairs(
         .select(F.col("doc_id").alias("ref_id"), sh.alias("s_b"))
         .select("ref_id", "s_b", F.size("s_b").alias("nb"))
     )
-    # Both static-side frames are materialized ONCE per session as parquet
+    # Both static-side frames are materialized ONCE (artifact store) as parquet
     # tables and scanned thereafter — the documented production form
     # (precompute offline, serve many streams). Parquet is the right
     # medium here where the block-store persist was not (caching the wide
@@ -658,26 +627,17 @@ def stream_current_window_histogram(
     return spark.table(sink_name)
 
 
-# Session-scoped memo for the containment screen's reference posting list
-# (sh, ref_id) — the lake-half shingle postings, parquet-materialized once
-# per (process, sf_dir); nb is NOT carried (containment divides by the
-# ARRIVING doc's size only).
-_CONT_REF_MEMO: dict[str, str] = {}
-
-
 def _containment_ref_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The containment screen's reference posting list (sh, ref_id) —
+    the lake-half shingle postings, written once through the artifact
+    store; nb is NOT carried (containment divides by the ARRIVING doc's
+    size only)."""
+    from .. import artifacts
     from ..functions.text import shingles
     from ..sources.tables import load
 
-    key = os.path.abspath(sf_dir)
-    idx_path = _CONT_REF_MEMO.get(key)
-    if idx_path is None:
-        import hashlib
-
-        digest = hashlib.sha256(key.encode()).hexdigest()[:16]
-        idx_path = os.path.join(
-            _prefix_idx_root(), "containment_ref", digest, "postings"
-        )
+    def build(d: str) -> str:
+        idx_path = os.path.join(d, "postings")
         (
             load(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 2 == 0)
@@ -692,8 +652,11 @@ def _containment_ref_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(idx_path)
         )
-        _CONT_REF_MEMO[key] = idx_path
-    return spark.read.parquet(idx_path)
+        return idx_path
+
+    return spark.read.parquet(
+        artifacts.get_or_build(spark, sf_dir, "containment_ref", build, ["documents"])
+    )
 
 
 def stream_containment_screen(

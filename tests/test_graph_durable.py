@@ -74,3 +74,16 @@ def test_recommit_preserves_time_travel_to_prior_graph(spark, tmp_path):
     assert em.current_version() == "v2"
     assert em.read(spark).count() == 10
     assert {(r.src_id, r.nbr_id) for r in em.read(spark, version="v1").collect()} == v1
+
+
+def test_beam_search_without_query_vector_raises_named_error(spark):
+    """An assign frame lacking the query vector (vec_id 0) must fail with
+    a ValueError naming it, not a bare IndexError from ``collect()[0]``."""
+    assign = spark.createDataFrame(
+        [(1, 0, [1, 2], 3), (2, 0, [2, 1], 3)],
+        "vec_id long, cluster int, __q array<bigint>, __s long",
+    )
+    work = spark.createDataFrame([(1, 2, 5000)], "src_id long, nbr_id long, cos_sim long")
+    gund = spark.createDataFrame([(1, 2), (2, 1)], "node long, nbr long")
+    with pytest.raises(ValueError, match="vec_id 0"):
+        graph_beam_search(spark, assign, work, 2, gund=gund)

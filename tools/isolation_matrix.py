@@ -6,12 +6,13 @@ reproduce whatever the driver does differently. This tool adds the two
 axes that harness lacks and that a driver plausibly differs on:
 
 - **Fresh process per query**: every (query, config) cell runs ``python
-  tools/check.py <sf_dir> <query>`` in its OWN subprocess — no memoized
-  graph tables, no trained-weight memo, no shared SparkSession, no warm
-  DuckDB connection. This replicates strict per-query isolation, the
+  tools/check.py <sf_dir> <query>`` in its OWN subprocess — an empty
+  artifact store (``artifacts.get_or_build``: no committed graph tables,
+  no trained weights), no shared SparkSession, no warm DuckDB
+  connection. This replicates strict per-query isolation, the
   leading structural suspect for why `quality_classifier_train_gd` can be
-  red while `quality_classifier_gd_scores` (same trajectory, same memo in
-  a SHARED process) is green.
+  red while `quality_classifier_gd_scores` (same trajectory, same stored
+  weights in a SHARED process) is green.
 - **Core count**: each query runs at local[32] and local[4]
   (``SPARK_GRAFT_CPUS``), changing task scheduling, partition planning,
   and every parallel reduce topology.
