@@ -15,7 +15,7 @@ consumed by a later action), so the contract is engine-level:
 
 Outside any scope, ``tracked_persist`` degrades to a plain ``persist`` and
 the caller owns cleanup (the documented pre-r6 contract), so one-shot
-scripts and the benchmark keep cache reuse across repeated runs.
+scripts keep cache reuse across repeated actions.
 
 ``unpersist(blocking=False)`` is deliberate: release is a metadata
 operation; executors drop blocks asynchronously.
@@ -106,8 +106,8 @@ def presentation_sort(df: DataFrame, *cols) -> DataFrame:
     untracked persist the CALLER owns. A scope-less long-lived session
     invoking registered queries repeatedly therefore accumulates one
     (result-sized) CacheManager entry per invocation; the engine's
-    runners (oracle harness, pipeline runner, bench timed runs since
-    r16) all wrap invocations in a scope, and one-shot scripts exit.
+    runners (oracle harness, pipeline runner, bench) all wrap
+    invocations in a scope, and one-shot scripts exit.
     Server-style callers must either scope their invocations or
     periodically ``spark.catalog.clearCache()`` — this is the registered-
     query cache-ownership contract (registry module docstring), stated

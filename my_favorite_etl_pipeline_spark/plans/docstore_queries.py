@@ -15,7 +15,8 @@ row-count or hash mismatch.
 
 from __future__ import annotations
 
-import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,10 +26,6 @@ from ..registry import register
 from ..sources.tables import load
 
 _EXPORT_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def _export_dir(sf_dir: str) -> str:
-    return os.path.join("/tmp/mfe_docstore", os.path.basename(sf_dir.rstrip("/")))
 
 
 @register(
@@ -61,24 +58,31 @@ def q_docstore_lang_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.docstore import register_docstore
 
     register_docstore(spark)
-    path = _export_dir(sf_dir)
-    # deterministic fixture export (idempotent overwrite): 8 part files so
-    # the read back is a genuinely parallel multi-partition scan
-    load(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    ).repartition(8).write.format("docstore").mode("overwrite").save(path)
-    back = (
-        spark.read.format("docstore")
-        .schema(_EXPORT_SCHEMA)
-        .load(path)
-        .filter(F.col("lang") == "en")
-    )
-    return (
-        back.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(TX.token_count("text")).cast("long").alias("n_tokens"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
+    # a private export per call: concurrent callers never share a directory.
+    # The small rollup is checkpointed before the export is removed, since
+    # the returned frame would otherwise still read it lazily.
+    path = tempfile.mkdtemp(prefix="mfe_docstore_")
+    try:
+        # 8 part files so the read back is a genuinely parallel
+        # multi-partition scan
+        load(spark, sf_dir, "documents").select(
+            "doc_id", "text", "lang", "source", "n_chars"
+        ).repartition(8).write.format("docstore").mode("overwrite").save(path)
+        back = (
+            spark.read.format("docstore")
+            .schema(_EXPORT_SCHEMA)
+            .load(path)
+            .filter(F.col("lang") == "en")
         )
-        .orderBy("source")
-    )
+        return (
+            back.groupBy("source")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum(TX.token_count("text")).cast("long").alias("n_tokens"),
+                F.sum("n_chars").cast("long").alias("total_chars"),
+            )
+            .orderBy("source")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

@@ -363,7 +363,7 @@ _KNN_ROUNDS = 4  # refinement rounds (r13: 3→4 per the measured payoff curve i
 # the family's r12 all-green driver row, VERDICT r12 item 2)
 _KNN_CAP = 24  # per-node fan-out cap in the two-hop join. (W, CAP) flipped
 # 16→24 JOINTLY in r14 per the measured payoff surface
-# (tools/experiments/nn_descent_width_probe.py, curve in BASELINE.md r13):
+# (BASELINE.md, "One-off probe results" and the r13 width/cap curve):
 # W alone bought +0.003 (fan-out-bound at CAP=16), CAP alone +0.066
 # (list-bound at W=16), but (24, 24) jointly reads 0.958 sf0.1 edge recall
 # (+0.162 over the (16, 16) 0.796) for ~+43% build — a better trade than a
@@ -710,8 +710,8 @@ def q_knn_graph_nn_descent_hq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same seeded 4-round refinement as knn_graph_nn_descent but with
     (W, CAP) = ({_KNN_HQ_W}, {_KNN_HQ_CAP}), the top row of the r13
     width/cap payoff surface (0.994 sf0.1 edge recall vs the serving
-    tier's 0.958, ~2× build — tools/experiments/nn_descent_width_probe.py,
-    table in BASELINE.md). A platform picks this tier when the graph IS
+    tier's 0.958, ~2× build — BASELINE.md, "One-off probe results" and
+    the r13 width/cap table). A platform picks this tier when the graph IS
     the product (offline semantic-dedup audits, eval-set neighborhood
     maps) and the serving tier when the graph feeds a beam search that
     re-ranks anyway.

@@ -27,7 +27,7 @@ Runtime contract notes:
   ``with caching.materialized_scope():`` and every persist created inside
   is released on exit (tools/check.py and the pipeline runner do; see
   tests/test_cache_lifecycle.py). Outside a scope the caller owns cleanup,
-  preserving cross-run cache reuse for bench-style repeated execution.
+  so a one-shot script keeps cache reuse across repeated actions.
 - LAZINESS: building a plan is normally free, but adaptive plans may run a
   tiny scalar probe job during CONSTRUCTION (tfidf_topk_similar_docs runs a
   max(df) aggregate to decide whether phase-1 salting is worth a shuffle).

@@ -46,8 +46,8 @@ def test_scope_is_nested_and_exception_safe(spark):
 
 
 def test_unscoped_persist_keeps_caller_ownership(spark):
-    """Outside any scope tracked_persist degrades to plain persist — bench
-    and one-shot scripts keep cross-run cache reuse."""
+    """Outside any scope tracked_persist degrades to plain persist — one-shot
+    scripts keep cache reuse across repeated actions."""
     spark.catalog.clearCache()
     df = tracked_persist(spark.range(5))
     df.count()

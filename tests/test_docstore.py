@@ -100,3 +100,28 @@ def test_mongo_parity_chain_from_docstore(docstore, tmp_path, sf_dir):
     )
     assert out.count() == ev.count()
     assert out.filter(F.col("ts").isNull()).count() == 0
+
+
+def test_registered_query_leaves_no_export_behind(spark, tmp_path, sf_dir, monkeypatch):
+    """docstore_lang_source_stats exports into a private directory per call
+    and removes it before returning: nothing is left under the temp root,
+    and nothing under the fixed shared path ``/tmp/mfe_docstore/<basename>``
+    that concurrent callers used to race on."""
+    import tempfile
+    import uuid
+
+    from my_favorite_etl_pipeline_spark.plans.docstore_queries import (
+        q_docstore_lang_source_stats,
+    )
+
+    corpus = tmp_path / f"corpus_{uuid.uuid4().hex}"  # a basename no one else uses
+    corpus.symlink_to(os.path.abspath(sf_dir))
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    rows = q_docstore_lang_source_stats(spark, str(corpus)).collect()
+
+    assert rows and sum(r.n_docs for r in rows) > 0
+    assert list(scratch.glob("mfe_docstore*")) == []
+    assert not os.path.exists(os.path.join("/tmp/mfe_docstore", corpus.name))

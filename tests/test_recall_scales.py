@@ -156,7 +156,7 @@ def test_ivf_pq_recall_floor_across_scales(spark, scale_dir):
 
 # Floors for the kNN-graph family, re-pinned r14 (VERDICT r13 item 1:
 # (_KNN_W, _KNN_CAP) 16→24 JOINTLY per the measured payoff surface in
-# tools/experiments/nn_descent_width_probe.py — W alone was fan-out-bound
+# BASELINE.md ("One-off probe results") — W alone was fan-out-bound
 # at +0.003, CAP alone list-bound at +0.066; the joint flip is where the
 # convergence lives). Measured r14: base (within-cell top-3) unchanged
 # (0.241 @ sf0.01 / 0.261 @ sf0.1 — the base build has no W/CAP);
@@ -321,8 +321,8 @@ def test_hnsw_two_layer_recall_floor_across_scales(spark, scale_dir):
 # Floors for the three-layer router (re-measured r14 over the (24, 24)
 # graph): recall@20 = 1.0 @ sf0.01 / 1.0 @ sf0.1 (was 0.95 at (16, 16);
 # the batch arms also measured 1.0 at both scales —
-# tools/experiments/r14_flip_recalls.py holds the full one-pass table,
-# transcribed to BASELINE.md r14). sf0.1 floor raised 0.7 → 0.8 to keep
+# the full one-pass table is in BASELINE.md r14, see "One-off probe
+# results"). sf0.1 floor raised 0.7 → 0.8 to keep
 # the collapse detector meaningful under the new measurement.
 _HN3_FLOORS = {"sf0.01": 0.8, "sf0.1": 0.8}
 

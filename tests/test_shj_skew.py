@@ -3,15 +3,20 @@
 
 ``session.get_spark`` sets ``spark.sql.join.preferSortMergeJoin=false``.
 The plan-time SHJ pick bounds only the AVERAGE per-partition build size
-(estimated stats × shuffle.partitions), so a skewed build-side key can
-exceed the per-task budget where sort-merge would have spilled — the OOM
-risk ADVICE r15 called out. The engine's backstop is AQE skew-join
-splitting (``spark.sql.adaptive.skewJoin.enabled=true``, which covers
-shuffled-hash joins on Spark >= 3.2). This test exercises that backstop
-adversarially: ONE hot build-side key owns ~95% of the rows and its
-post-shuffle partition is far above both skew thresholds; the join must
-(a) complete with correct results and (b) show an ``AQEShuffleRead`` with
-skew-split partitions in the final adaptive plan.
+(estimated stats × shuffle.partitions), so a skewed key can leave one
+task with a partition far above the per-task budget where sort-merge
+would have spilled — the OOM risk ADVICE r15 called out. The engine's
+backstop is AQE skew-join splitting
+(``spark.sql.adaptive.skewJoin.enabled=true``, which covers shuffled-hash
+joins on Spark >= 3.2). This test exercises that backstop adversarially:
+ONE hot key owns ~95% of the rows of the large STREAM side (the left
+input; the 8-row right input is the hash-table build side), and its
+post-shuffle partition is far above both skew thresholds. The join must
+(a) complete with correct results and (b) run in the final adaptive plan
+as a skew-flagged shuffled-hash join whose stream-side ``AQEShuffleRead``
+splits exactly that one hot partition into several map-range slices
+(``PartialReducerPartitionSpec``) while the build side is only
+replicated, never split.
 
 Thresholds are scaled DOWN in a scoped conf block (256 MB default →
 256 KB) so the mechanism is provable in a unit-test-sized fixture — the
@@ -27,6 +32,25 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark.sql import functions as F
+
+
+def _plan_nodes(node):
+    """Every physical node of a final adaptive plan, query stages included."""
+    yield node
+    if node.getClass().getSimpleName().endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+        return
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _read_specs(side) -> list:
+    """The partition specs of the one AQEShuffleRead under a join input."""
+    reads = [n for n in _plan_nodes(side) if n.getClass().getSimpleName() == "AQEShuffleReadExec"]
+    assert len(reads) == 1, [n.getClass().getSimpleName() for n in _plan_nodes(side)]
+    specs = reads[0].partitionSpecs()
+    return [specs.apply(i) for i in range(specs.size())]
 
 
 @contextmanager
@@ -88,7 +112,23 @@ def test_shj_skew_split_completes_and_fires(spark):
         assert agg[0]["k"] == 0 and agg[0]["count"] == 190_000
 
         # final adaptive plan must show the skew split actually fired
-        joined.collect()  # materialize so the SQL-tab final plan exists
-        final = joined._jdf.queryExecution().executedPlan().toString()
-        assert "AQEShuffleRead" in final
-        assert "skewed" in final, final[:2000]
+        joined.collect()  # materialize so the final adaptive plan exists
+        adaptive = joined._jdf.queryExecution().executedPlan()
+        final = adaptive.executedPlan()
+        joins = [
+            n for n in _plan_nodes(final)
+            if n.getClass().getSimpleName() == "ShuffledHashJoinExec"
+        ]
+        assert len(joins) == 1, adaptive.toString()[:2000]
+        shj = joins[0]
+        assert shj.isSkewJoin() and shj.buildSide().toString() == "BuildRight"
+
+        def partial(specs):
+            return [s for s in specs if s.getClass().getSimpleName() == "PartialReducerPartitionSpec"]
+
+        stream = partial(_read_specs(shj.left()))
+        # the one hot reducer partition is split into >= 2 map-range slices
+        assert len(stream) >= 2, adaptive.toString()[:2000]
+        assert len({s.reducerIndex() for s in stream}) == 1
+        # the build side is replicated for the split, never itself split
+        assert partial(_read_specs(shj.right())) == []
